@@ -105,6 +105,16 @@ _ROUND_PRIORITY = [
     "streaming_tumbling_counts",
     "streaming_dedup_within_watermark",
     "streaming_stateful_running_totals",
+    # --- lake registration declares the written schema --------------
+    # LakeEngine.load_table / load_dataframe / promote_to_dw register
+    # each table with the schema of the frame just written instead of
+    # letting Spark infer it from the files: every query that builds a
+    # lake table and reads it back through the catalog is re-proven
+    # (curation_pipeline_run, the fifth consumer, is already above).
+    "engine_sql_file_build",
+    "engine_partitioned_incremental",
+    "dw_promotion_gate",
+    "pipeline_dag_build",
     # 14-26: freshness rotation — the oldest (r9-vintage) green rows,
     # tools/freshness_report.py order.
     "kmv_jaccard_event_types",
@@ -132,9 +142,9 @@ _ROUND_PRIORITY = [
     "window_first_last_order",
     "window_percent_rank",
     "zorder_cluster_events",
-    # 40-50: oldest r10-vintage rows (freshness_report order; the two
-    # tail rows rotated out to make room for the batch-2 queries stay
-    # r10-vintage and lead the r17 freshness queue).
+    # 44-50: oldest r10-vintage rows (freshness_report order; the
+    # tail rows rotated out to make room for newer entries stay
+    # r10-vintage and lead the next freshness queue).
     "approx_distinct_users_daily",
     "approx_percentile_tolerance",
     "asof_nearest_click",
@@ -142,10 +152,6 @@ _ROUND_PRIORITY = [
     "bag_setops_lineitem",
     "bitmap_user_event_mask",
     "bollinger_bands_daily",
-    "bpe_merge_step",
-    "cohort_ltv_curve",
-    "cusum_changepoint_daily",
-    "decile_lift_table",
 ]
 
 

@@ -10,8 +10,11 @@ Re-expresses the reference's medallion model and layer→format policy:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 from enum import Enum
+
+from pyspark.sql.types import StructField, StructType
 
 
 class Layer(str, Enum):
@@ -67,22 +70,39 @@ def layer_storage_format(layer: Layer | str) -> StorageFormat:
 
 
 def external_table_ddl(
-    table: str, location: str, layer: Layer | str, columns: dict[str, str] | None = None
+    table: str,
+    location: str,
+    layer: Layer | str,
+    schema: StructType | None = None,
+    partitions: Sequence[str] = (),
 ) -> str:
     """``CREATE TABLE ... USING <fmt> LOCATION ...`` DDL for the Spark catalog.
 
     The Spark-catalog equivalent of the reference's Athena external-table
     DDL (``athena/table_storage_format.py:20-32``): same layer→format
     policy, but targeting ``spark.sql`` instead of Glue.
+
+    ``schema`` (the schema of the frame just written) becomes the column
+    list, every top-level field nullable — the files are the source of
+    truth and a later batch may carry nulls — with ``partitions`` as the
+    ``PARTITIONED BY`` clause. A declared schema costs the catalog no
+    read of the table: without one, Spark infers the columns and the
+    partitioning from the files (every JSON file of a raw table, or a
+    Parquet footer-read job), which is what ``register_existing`` does.
     """
     fmt = layer_storage_format(layer)
-    cols = ""
-    if columns:
-        cols = " (" + ", ".join(f"{name} {dtype}" for name, dtype in columns.items()) + ")"
+    cols = part = ""
+    if schema is not None:
+        nullable = StructType(
+            [StructField(f.name, f.dataType, True, f.metadata) for f in schema]
+        )
+        cols = f" ({nullable.toDDL()})"
+        if partitions:
+            part = f" PARTITIONED BY ({', '.join(partitions)})"
     tblprops = ""
     if fmt.compression != "none":
         tblprops = f" TBLPROPERTIES ('compression'='{fmt.compression}')"
     return (
         f"CREATE TABLE IF NOT EXISTS {table}{cols} "
-        f"USING {fmt.format.upper()} LOCATION '{location}'{tblprops}"
+        f"USING {fmt.format.upper()}{part} LOCATION '{location}'{tblprops}"
     )

@@ -22,6 +22,7 @@ from collections.abc import Sequence
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from etl_projects_spark.catalog import register_testdata
 from etl_projects_spark.config import Layer, external_table_ddl
@@ -92,13 +93,18 @@ class LakeEngine:
         partitions that no longer exist in the source.
 
         After the write, the table is registered in the SPARK CATALOG as
-        an external table (``CREATE TABLE ... USING <fmt> LOCATION``) —
+        an external table (``CREATE TABLE ... (<columns>) USING <fmt>
+        LOCATION``) declaring the schema of the frame just written —
         the Spark twin of the reference's create-external-table step
         after every load (``datalake_sub_dag_builder.py:117-141`` +
-        ``athena/table_storage_format.py:20-32``). Unlike a temp view,
-        the entry lives in the shared external catalog: every session on
-        the same catalog sees it, and with a persistent metastore it
-        survives restarts.
+        ``athena/table_storage_format.py:20-32``), whose DDL declares
+        its columns too. The declared schema is what keeps a re-run's
+        entry fresh, and it spares the catalog a schema-inference read
+        of the table on every load; only :meth:`register_existing`,
+        with no frame at hand, infers. Unlike a temp view, the entry lives
+        in the shared external catalog: every session on the same
+        catalog sees it, and with a persistent metastore it survives
+        restarts.
         """
         all_params = dict(params or {})
         if ds is not None:
@@ -131,7 +137,9 @@ class LakeEngine:
             df, database, table, layer=layer, partitions=partitions,
             mode="overwrite", **write_opts,
         )
-        return self._register_external(database, table, path, layer, partitions)
+        return self._register_external(
+            database, table, path, layer, partitions, df.schema
+        )
 
     def load_dataframe(
         self,
@@ -152,7 +160,9 @@ class LakeEngine:
             df, database, table, layer=layer, partitions=partitions,
             mode="overwrite",
         )
-        return self._register_external(database, table, path, layer, partitions)
+        return self._register_external(
+            database, table, path, layer, partitions, df.schema
+        )
 
     def _register_external(
         self,
@@ -161,13 +171,17 @@ class LakeEngine:
         path: str,
         layer: Layer | str,
         partitions: Sequence[str] = (),
+        schema: StructType | None = None,
     ) -> DataFrame:
         """Run the external-table DDL against the Spark catalog (K3).
 
-        Drop-and-recreate keeps re-runs schema-fresh (dropping an
-        external table never touches the data files); MSCK REPAIR
-        registers Hive-layout partition directories so partition
-        pruning works through the catalog entry.
+        Drop-and-recreate with ``schema`` — the schema of the frame
+        just written — keeps re-runs schema-fresh without reading the
+        table (dropping an external table never touches the data
+        files). Only ``register_existing`` passes no schema and lets
+        Spark infer it from the files. MSCK REPAIR registers
+        Hive-layout partition directories so partition pruning works
+        through the catalog entry.
 
         The flattened catalog name ``<database>_<table>`` is ambiguous
         in principle (('sales_eu','orders') and ('sales','eu_orders')
@@ -194,7 +208,7 @@ class LakeEngine:
         # a leftover temp view with the same name would shadow the table
         self.spark.catalog.dropTempView(name)
         self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        self.spark.sql(external_table_ddl(name, path, layer))
+        self.spark.sql(external_table_ddl(name, path, layer, schema, partitions))
         if partitions:
             self.spark.sql(f"MSCK REPAIR TABLE {name}")
         return self.spark.table(name)
@@ -210,7 +224,8 @@ class LakeEngine:
         files already sit at the engine's canonical path — the recovery
         step after a metastore loss or a data-dir relocation (the data
         is the source of truth; the catalog entry is derived). Pure
-        DDL, no data movement."""
+        DDL, no data movement; with no written frame to take the schema
+        from, the columns and partitioning are inferred from the files."""
         return self._register_external(
             database,
             table,
@@ -275,7 +290,9 @@ class LakeEngine:
             path = self.writer.load_table(df, database, table, layer=Layer.DW)
         finally:
             df.unpersist()
-        return self._register_external(database, table, path, Layer.DW)
+        return self._register_external(
+            database, table, path, Layer.DW, schema=df.schema
+        )
 
 
 class PipelineRunner:

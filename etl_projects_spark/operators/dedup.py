@@ -461,7 +461,7 @@ def jaccard_pairs(
         # emitted ordered pairs are exactly the r15 set. The loud
         # width guard is the curriculum_schedule/dsir precedent:
         # overflow would corrupt pair ordering silently.
-        packed = F.shiftleft(F.col("id"), _NSH_BITS) + F.col("n_sh")
+        packed = F.shiftleft(F.col("id").cast("long"), _NSH_BITS) + F.col("n_sh")
         packed = F.when(
             (F.col("id") >= 0)
             & (F.col("id") < F.lit(1 << (63 - _NSH_BITS)))

@@ -47,12 +47,17 @@ def materialize(df: DataFrame, action=None) -> DataFrame:
     probe job. The callable receives the persisted DataFrame; it must
     scan every row (approxQuantile/count-style), or the cache is only
     partially populated and downstream branches recompute the rest.
+    An action that raises releases the pin before the error propagates.
     """
     df = df.persist()
-    if action is None:
-        df.count()
-    else:
-        action(df)
+    try:
+        if action is None:
+            df.count()
+        else:
+            action(df)
+    except BaseException:
+        df.unpersist()
+        raise
     return df
 
 

@@ -21,7 +21,25 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def resource_defaults() -> tuple[int, str]:
+    """(local cores, driver heap) for a session built here.
+
+    ``$SPARK_GRAFT_CPUS`` and ``$SPARK_GRAFT_DRIVER_MEM`` win when set.
+    Otherwise the cores are the machine's own and the heap is half its
+    physical memory in whole GiB (at least 1g, at most 16g): more
+    threads than cores only oversubscribe them, and a heap near the
+    size of RAM leaves nothing for the Python workers or the OS.
+    """
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{max(1, min(16, phys // 2 // 2**30))}g"
+    return cpus, mem
+
+
+DEFAULT_SHUFFLE_PARTITIONS = resource_defaults()[0]
 
 
 def build_session(
@@ -32,11 +50,12 @@ def build_session(
 ) -> SparkSession:
     """Build (or get) a SparkSession with the engine's standard config.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so the same entry
-    point works on the test harness; on a cluster, pass ``master=None``
-    via spark-submit and the submit-time master wins.
+    ``master`` defaults to ``local[<cores>]`` (see
+    :func:`resource_defaults`) so the same entry point works on the
+    test harness; on a cluster, pass ``master=None`` via spark-submit
+    and the submit-time master wins.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = resource_defaults()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -59,7 +78,7 @@ def build_session(
         # explicitly (see queries.load).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # Scan sizing: 128 MiB splits keep one task's working set well
         # inside executor memory at any SF; openCostInBytes biases the
         # packer against tiny-file tasks (the 250k-rows-per-file layout

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import math
 import os
+import tempfile
+import uuid
 
 import duckdb
 
@@ -26,8 +28,30 @@ TABLES = (
 )
 
 
+# DuckDB's defaults are a spill directory ``.tmp`` under the cwd, 80%
+# of RAM and no cap on spill: a runaway oracle filled the checkout with
+# gigabytes of orphaned ``duckdb_temp_*`` files. Bounded, it fails
+# loudly instead.
+DUCKDB_MEMORY_LIMIT = "4GB"
+DUCKDB_MAX_SPILL = "8GB"
+
+
+def bounded_duckdb() -> duckdb.DuckDBPyConnection:
+    """In-memory DuckDB with capped memory and spill. The spill dir is
+    a fresh path under ``$SPARK_LOCAL_DIRS`` (else the system temp
+    dir); DuckDB creates it on first spill and removes it on close."""
+    base = (os.environ.get("SPARK_LOCAL_DIRS") or tempfile.gettempdir()).split(",")[0]
+    return duckdb.connect(
+        config={
+            "temp_directory": os.path.join(base, f"duckdb_spill_{uuid.uuid4().hex}"),
+            "memory_limit": DUCKDB_MEMORY_LIMIT,
+            "max_temp_directory_size": DUCKDB_MAX_SPILL,
+        }
+    )
+
+
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    con = bounded_duckdb()
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):
@@ -84,7 +108,10 @@ def compare(spark_df, oracle_sql: str, sf_dir: str) -> list[str]:
     s_pdf = spark_df.toPandas()
     scols = list(s_pdf.columns)
     con = duckdb_con(sf_dir)
-    o_pdf = con.execute(oracle_sql).df()
+    try:
+        o_pdf = con.execute(oracle_sql).df()
+    finally:
+        con.close()
     ocols = list(o_pdf.columns)
     if sorted(scols) != sorted(ocols):
         problems.append(f"schema mismatch: spark={sorted(scols)} oracle={sorted(ocols)}")

@@ -540,3 +540,21 @@ def test_scoped_pins_are_keyed_per_session(spark):
     assert pinned() == baseline + 1
     release_scope(scope)  # session=None sweeps the remaining holder
     assert pinned() == baseline
+
+
+def test_jaccard_grouped_path_int_ids_do_not_wrap(spark):
+    """The grouped path packs (id, n_sh) into one long. An IntegerType
+    id shifted without a widening cast wrapped at 2^11 silently, and
+    the 2^43 width guard passed every int, so pairs came back with
+    corrupted ids instead of failing."""
+    from etl_projects_spark.operators import dedup
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(3000, text), (5000, text + " today"), (7, "nothing shared here at all")],
+        "doc_id int, text string",
+    )
+    got = dedup.jaccard_pairs(
+        None, shingle_sets=dedup.word_shingle_sets(docs)
+    ).collect()
+    assert [(r.id_a, r.id_b) for r in got] == [(3000, 5000)]

@@ -225,6 +225,66 @@ def test_load_table_schema_evolution_rerun(engine):
     assert cols == ["o_orderkey", "o_totalprice"]
 
 
+_RAW_BATCH = (
+    "SELECT o_totalprice, o_orderkey, o_orderdate, o_orderstatus, '{ds}' AS ds "
+    "FROM orders WHERE year(o_orderdate) = {ds}"
+)
+
+
+def test_load_table_registers_written_schema(engine):
+    """The catalog entry declares the schema of the frame just written
+    (every top-level field nullable), in the written column order —
+    not JSON inference's alphabetical columns with the timestamp as a
+    string and ``ds`` inferred as a number."""
+    from pyspark.sql.types import StructField, StructType
+
+    for ds in ("1996", "1997"):
+        engine.load_table(
+            _RAW_BATCH, "datalake_reg", "orders_raw", layer=Layer.RAW,
+            partitions=["ds"], ds=ds, is_incremental=True,
+        )
+    written = engine.sql(_RAW_BATCH, params={"ds": "1997"}).schema
+    want = StructType(
+        [StructField(f.name, f.dataType, True) for f in written]
+    )
+    got = engine.spark.table("datalake_reg_orders_raw")
+    assert got.schema == want
+    assert dict(got.dtypes)["o_orderdate"].startswith("timestamp")
+    assert dict(got.dtypes)["ds"] == "string"
+    base = engine.sql(
+        "SELECT COUNT(*) AS n FROM orders WHERE year(o_orderdate) IN (1996, 1997)"
+    ).collect()[0]["n"]
+    assert got.count() == base
+
+
+def test_register_external_starts_no_spark_job(engine, monkeypatch):
+    """Registering a freshly written table is pure catalog work: with
+    the written schema declared, no job reads the table back (before,
+    JSON inference scanned every file of a raw table on each load)."""
+    sc = engine.spark.sparkContext
+    register = engine._register_external
+    groups = []
+
+    def traced(*args, **kwargs):
+        group = f"register_{len(groups)}"
+        groups.append(group)
+        sc.setJobGroup(group, "external-table registration")
+        try:
+            return register(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(engine, "_register_external", traced)
+    for ds in ("1996", "1997"):
+        engine.load_table(
+            _RAW_BATCH, "datalake_reg", "orders_raw_jobs", layer=Layer.RAW,
+            partitions=["ds"], ds=ds, is_incremental=True,
+        )
+    assert len(groups) == 2
+    started = {g: list(sc.statusTracker().getJobIdsForGroup(g)) for g in groups}
+    assert started == {g: [] for g in groups}
+
+
 def test_load_table_cluster_by_sorts_within_files(spark, sf_dir, tmp_path):
     import glob
     import os

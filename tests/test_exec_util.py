@@ -248,3 +248,23 @@ def test_materialize_scoped_race_loser_unpersists_itself(spark, monkeypatch):
     )
     exec_util.release_scope(scope)
     assert pinned() == baseline
+
+
+def test_materialize_raising_action_releases_pin(spark):
+    """A materializing action that raises (e.g. approxQuantile on a
+    non-numeric column) must not leave the relation persisted: the
+    caller never receives the frame, so nothing could release it."""
+    from etl_projects_spark.operators.exec_util import materialize
+
+    def pinned() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    baseline = pinned()
+
+    def failing(df):
+        df.count()
+        raise RuntimeError("probe failed")
+
+    with pytest.raises(RuntimeError, match="probe failed"):
+        materialize(spark.range(10), action=failing)
+    assert pinned() == baseline

@@ -82,9 +82,9 @@ def test_hex60_matches_duckdb_md5_cast(strings):
     """Cross-engine hash parity is load-bearing for the whole dedup
     family: Spark's conv(substr(md5,1,15),16,10) must equal DuckDB's
     CAST('0x'||substr(md5,1,15) AS BIGINT) for arbitrary unicode."""
-    import duckdb
+    from tests.oracle_check import bounded_duckdb
 
-    con = duckdb.connect()
+    con = bounded_duckdb()
     duck = [
         con.execute(
             "SELECT CAST(('0x' || substr(md5(?), 1, 15)) AS BIGINT)", [s]
